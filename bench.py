@@ -378,23 +378,11 @@ def main() -> None:
         ladder_queries = [
             "hourly_business_metrics", "rolling_24h_metrics",
             "customer_view", "business_kpis_growth", "user_sessions",
-            # the documented 100 TB swaps for customer_view (both
-            # oracle-identical): two-phase partial aggregation and the
-            # pre-filtered switch-struct join — tracked on the ladder so the
-            # swap's scaling claim has measured numbers next to the
-            # single-shuffle variant they replace
-            "customer_view_twophase",
-            "customer_view_prefilter",
         ]
         ladder: dict[str, float] = {}
         for name in ladder_queries:
             t0 = time.perf_counter()
-            # customer_view auto-dispatches on measured density since round
-            # 10; the ladder's job is to measure the NAMED plans, so pin the
-            # single-shuffle variant explicitly (auto itself is tested in
-            # tests/test_round10_ops.py, not timed here).
-            kw = {"variant": "single"} if name == "customer_view" else {}
-            catalog[name].builder(spark, ladder_dir, **kw).write.format("noop").mode(
+            catalog[name].builder(spark, ladder_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             ladder[name] = round(time.perf_counter() - t0, 3)
@@ -408,13 +396,10 @@ def main() -> None:
         # Streaming replay rung (round-11 verdict item 3): the bounded-
         # state exact hourly twin replayed over FIXED ascending event-time
         # chunks at 10x density with availableNow, at the engine's hours-
-        # class state partitioning (SCALE.md §4.3). Runs HERE — after the
-        # 10x rung whose data it reuses, BEFORE ladder100 — because the
-        # 100x rung's heap/GC hangover inflated the replay ~2x when it ran
-        # afterwards (measured r12: 20.1 s after ladder100 vs 11.3 s
-        # before, both at 8 state partitions). Chunk-file generation is
-        # excluded; the timed span is the streaming query itself (8 data
-        # micro-batches + the sentinel flush batch).
+        # class state partitioning (SCALE.md §4.3), over the 10x rung's
+        # data. Chunk-file generation is excluded; the timed span is the
+        # streaming query itself (8 data micro-batches + the sentinel
+        # flush batch).
         # SPARK_GRAFT_STREAM_REPLAY=0 skips.
         if os.environ.get("SPARK_GRAFT_STREAM_REPLAY", "1") != "0":
             from energy_data_stream_processing_spark.streaming.runner import (
@@ -639,55 +624,6 @@ def main() -> None:
             }
             shutil.rmtree(hot10_src, ignore_errors=True)
 
-        # 100x density rung (round-8 verdict item 3): the three
-        # customer_view plans head-to-head at sf10-equivalent per-customer
-        # event density, where the 10x run showed the single-shuffle plan's
-        # curve bending. Generation time excluded; SPARK_GRAFT_LADDER100=0
-        # skips just this rung.
-        if os.environ.get("SPARK_GRAFT_LADDER100", "1") != "0":
-            ladder100_dir = _scaled_dir(sf_dir, "events")
-            (
-                ev.crossJoin(spark.range(100).withColumnRenamed("id", "_rep"))
-                .withColumn("event_id", F.col("event_id") * 100 + F.col("_rep"))
-                .drop("_rep")
-                .repartition(32)
-                .write.mode("overwrite")
-                .parquet(f"{ladder100_dir}/events.parquet")
-            )
-            # Medians of 5 INTERLEAVED reps (round-12 verdict item 5,
-            # widened to 5 by round-14 verdict item 5: medians-of-3 still
-            # admitted [31.7, 18.5, 14.5]-style spreads — the first rep
-            # pays one-time scan/codegen warmup AND any VM stall, and with
-            # 3 reps one more stall drags the median). Two r12 single
-            # shots read 21.1 s vs 37.2 s for this same rung — a
-            # single-shot number that noisy in a tracked artifact invites
-            # false regression hunts. Interleaving (A,B,C, A,B,C, ...)
-            # spreads any transient VM stall across all three plans
-            # instead of poisoning one; a 5-rep median survives two.
-            l100_names = (
-                "customer_view",
-                "customer_view_twophase",
-                "customer_view_prefilter",
-            )
-            l100_reps: dict[str, list[float]] = {n: [] for n in l100_names}
-            for _rep in range(5):
-                for name in l100_names:
-                    t0 = time.perf_counter()
-                    kw = {"variant": "single"} if name == "customer_view" else {}
-                    catalog[name].builder(spark, ladder100_dir, **kw).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    l100_reps[name].append(round(time.perf_counter() - t0, 3))
-            l100 = {n: sorted(v)[len(v) // 2] for n, v in l100_reps.items()}
-            result["ladder100"] = {
-                "scale_x": 100,
-                "sf_equiv": round(sf * 100, 3),
-                "value": round(sum(l100.values()), 3),
-                "queries": l100,
-                "reps": l100_reps,
-                "stat": "median_of_5_interleaved",
-            }
-
     # Composed LLM-corpus curation pipeline (non-headline): quality ->
     # LSH near-dedup keep -> eval-set decontamination -> FFD packing ->
     # split accounting as ONE job, so the training-data-pipeline story has
@@ -805,7 +741,6 @@ def compact_line(result: dict) -> str:
         short: result[key]
         for short, key in (
             ("ladder", "ladder"),
-            ("ladder100", "ladder100"),
             ("replay", "streaming_replay_sec"),
             ("replay_sharded", "streaming_replay_sharded_sec"),
             ("replay_hot", "replay_sharded_hot"),
@@ -814,9 +749,8 @@ def compact_line(result: dict) -> str:
         )
         if key in result
     }
-    for short in ("ladder", "ladder100"):
-        if short in rungs_sec:
-            rungs_sec[short] = rungs_sec[short]["value"]
+    if "ladder" in rungs_sec:
+        rungs_sec["ladder"] = rungs_sec["ladder"]["value"]
     hot_win = None
     if "replay_hot" in rungs_sec:
         # compact line carries the sharded arm's seconds (canary-comparable

@@ -103,13 +103,15 @@ def cmd_pipeline(args) -> int:
     spark = _spark()
     out = args.output.rstrip("/")
     if args.streaming:
-        from .sources.replay_source import JsonlReplayDataSource
+        from .sources.replay_source import JsonlReplayDataSource, checkpoint_commit_id
 
         spark.dataSource.register(JsonlReplayDataSource)
+        ckpt = f"{out}/_checkpoint"
         stream = (
             spark.readStream.format("jsonl_replay")
             .option("path", args.input)
             .option("lines_per_batch", str(args.lines_per_batch))
+            .option("commit_id", checkpoint_commit_id(args.input, ckpt))
             .load()
         )
         counts = {"valid": 0, "invalid": 0, "batches": 0}
@@ -151,7 +153,7 @@ def cmd_pipeline(args) -> int:
         # drained, preserving the multi-micro-batch replay.
         q = (
             stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{out}/_checkpoint")
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.processAllAvailable()

@@ -151,83 +151,3 @@ FROM (
 ) h
 """.strip()
 
-
-def hourly_business_metrics_two_phase(events: DataFrame) -> DataFrame:
-    """Result-identical to ``hourly_business_metrics``, with exact distincts
-    via PRE-AGGREGATION instead of the Expand-based distinct plan — the
-    100 TB strategy this module's scale notes prescribe.
-
-    Phase 1 aggregates per (hour, customer_id): every counter/sum/max
-    composes, and active_customers becomes a count of non-null customer
-    groups. new_sessions gets its own (hour, session_id) pre-aggregation
-    (session ids are NOT per-customer, so per-customer rollups can't count
-    them). Decimal sums stay decimal through phase 1 so the final double
-    conversion is bit-identical to the one-phase plan — the query shares
-    its DuckDB oracle.
-
-    Tradeoff: three small shuffles instead of one Expand(x3) shuffle; each
-    pre-aggregation key is high-cardinality and skew-free, so no single
-    reducer ever sees a whole busy hour.
-    """
-    t = F.col("event_type")
-    pay = F.col("payment_amount")
-    energy = F.col("energy_consumed")
-
-    per_customer = events.groupBy(
-        F.date_trunc("hour", F.col("event_time")).alias("hour"), F.col("customer_id")
-    ).agg(
-        F.count(F.when(t == "tariff_switch", 1)).alias("p_switches"),
-        F.sum(F.when(t == "tariff_switch", pay)).alias("p_switch_rev"),
-        F.count(F.when((t == "tariff_switch") & (F.col("tariff_type") == "green"), 1)).alias(
-            "p_green"
-        ),
-        F.count(F.when(t == "incentive_claim", 1)).alias("p_claims"),
-        F.sum(F.when(t == "incentive_claim", pay)).alias("p_claim_pay"),
-        F.count(F.when(t == "user_login", 1)).alias("p_logins"),
-        F.sum(F.when(t == "energy_consumed", energy)).alias("p_energy"),
-        F.max(F.when(t == "energy_consumed", energy)).alias("p_peak"),
-        F.sum(F.when(t == "bill_payment", pay)).alias("p_pay"),
-        F.count(F.when((t == "bill_payment") & pay.isNotNull(), 1)).alias("p_pay_events"),
-    )
-
-    per_hour = per_customer.groupBy("hour").agg(
-        F.sum("p_switches").alias("tariff_switches"),
-        F.coalesce(F.sum("p_switch_rev").cast("double"), F.lit(0.0)).alias(
-            "total_switch_revenue"
-        ),
-        F.sum("p_green").alias("green_tariff_switches"),
-        F.sum("p_claims").alias("incentive_claims"),
-        F.coalesce(F.sum("p_claim_pay").cast("double"), F.lit(0.0)).alias(
-            "total_incentive_payouts"
-        ),
-        F.sum("p_logins").alias("total_logins"),
-        F.count(F.when(F.col("customer_id").isNotNull(), 1)).alias("active_customers"),
-        F.coalesce(F.sum("p_energy").cast("double"), F.lit(0.0)).alias("total_energy_consumed"),
-        F.coalesce(F.max("p_peak").cast("double"), F.lit(0.0)).alias("peak_hour_usage"),
-        F.coalesce(F.sum("p_pay").cast("double"), F.lit(0.0)).alias("total_payments"),
-        F.sum("p_pay_events").alias("payment_events"),
-    )
-
-    sessions = (
-        events.where((t == "user_login") & F.col("session_id").isNotNull())
-        .groupBy(F.date_trunc("hour", F.col("event_time")).alias("hour"), F.col("session_id"))
-        .agg(F.lit(1).alias("_one"))
-        .groupBy("hour")
-        .agg(F.count(F.lit(1)).alias("new_sessions"))
-    )
-
-    joined = per_hour.join(sessions, "hour", "left").na.fill({"new_sessions": 0})
-    derived = joined.withColumns(
-        {
-            "avg_switch_value": round_half_up(
-                safe_div(F.col("total_switch_revenue"), F.col("tariff_switches"))
-            ),
-            "avg_consumption_per_customer": round_half_up(
-                safe_div(F.col("total_energy_consumed"), F.col("active_customers"))
-            ),
-            "avg_payment_amount": round_half_up(
-                safe_div(F.col("total_payments"), F.col("payment_events"))
-            ),
-        }
-    )
-    return derived.select("hour", *METRIC_COLUMNS)

@@ -78,11 +78,6 @@ _PLAN_MEMO_NAMES = frozenset(
         "dedup_minhash_lsh",
         "embedding_cosine_topk",
         "ann_lsh_topk",
-        # the named customer_view swaps (round 16): pure-plan builders
-        # (energy_events + expression trees, zero jobs) that the bench
-        # LADDER rungs rebuild once per interleaved rep
-        "customer_view_twophase",
-        "customer_view_prefilter",
         # ann_ivf_topk deliberately absent: one training job per build.
     }
 )

@@ -164,6 +164,32 @@ def _clear_watermark(sidecar: str) -> None:
             pass
 
 
+def _commit_sidecar(path: str, commit_id: str | None) -> str:
+    return f"{path}.replay_commit" + (f".{commit_id}" if commit_id else "")
+
+
+def checkpoint_commit_id(path: str, checkpoint: str) -> str:
+    """``commit_id`` giving the query checkpointed at ``checkpoint`` its own
+    durable floor for the replayed file at ``path``.
+
+    Spark asks a FRESH query for ``latestOffset`` before ``initialOffset``,
+    so the reader's fresh-lineage reset comes too late for the first batch:
+    a floor another drain of the same file left in a shared sidecar makes
+    that batch hold the whole file. Keying the sidecar by the checkpoint
+    keeps lineages apart, and a checkpoint with no offset log yet (new, or
+    deleted and re-created) starts with no floor."""
+    import hashlib
+
+    cid = hashlib.sha1(os.path.realpath(checkpoint).encode()).hexdigest()[:16]
+    try:
+        fresh = not os.listdir(os.path.join(checkpoint, "offsets"))
+    except OSError:
+        fresh = True
+    if fresh:
+        _clear_watermark(_commit_sidecar(path, cid))
+    return cid
+
+
 def _order(path: str, seed: str | None) -> list[int]:
     import hashlib
 
@@ -236,14 +262,17 @@ class _ReplayStreamReader(DataSourceStreamReader):
         # when several independently-checkpointed queries replay one file.
         cid = options.get("commit_id")
         self._namespaced = cid is not None
-        self.sidecar = f"{self.path}.replay_commit" + (f".{cid}" if cid else "")
+        self.sidecar = _commit_sidecar(self.path, cid)
         self._floor = _load_watermark(self.sidecar, "line")
 
     def initialOffset(self) -> dict:
         # Called ONLY for a fresh query (no offset log) — never on a
         # checkpoint restart. A fresh query is a new delivery lineage, so
-        # an inherited sidecar floor must not apply: it would collapse the
-        # whole previously-replayed range into one unpaced first batch.
+        # an inherited sidecar floor must not apply. Spark calls this AFTER
+        # the first latestOffset, though, so an inherited floor has already
+        # sized the first batch by then: a caller that replays one file
+        # into several checkpoints gives each its own sidecar
+        # (checkpoint_commit_id); this reset covers later batches.
         #
         # Hazard (warned, not silent): with no commit_id, the sidecar is
         # keyed by file path alone, so a SECOND fresh query replaying the

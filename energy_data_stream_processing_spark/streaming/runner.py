@@ -827,8 +827,7 @@ def shard_count_for(peak_hour_distinct: int) -> int:
 
 
 def estimate_peak_hour_distinct_customers(events: DataFrame) -> int:
-    """Cheap density probe for the stateful dispatch — the streaming twin
-    of ``estimate_events_per_customer`` (customer_view_dispatch): per-hour
+    """Cheap density probe for the stateful dispatch: per-hour
     approx-distinct customers, maxed over hours. One narrow two-column job
     (at 100 TB it reads only the event_time/customer_id pages; HLL's ±2%
     is irrelevant against a threshold set orders of magnitude from both
@@ -867,8 +866,7 @@ def run_hourly_stream_dispatched(
     item 2): run the BOUNDED twin at normal per-hour key density, the
     SHARDED hot-hour variant (+ downstream merge) when one hour's distinct
     customer set would make a single state row the serialization
-    bottleneck — the stateful analogue of ``customer_view_dispatch``'s
-    density probe. All paths share the batch oracle; the dispatch only
+    bottleneck. All paths share the batch oracle; the dispatch only
     picks the physical strategy.
 
     - ``variant="auto"`` decides from ``peak_hour_distinct`` (pass it when
@@ -2452,9 +2450,8 @@ from ..plans.timeseries_queries import WAU_GROWTH_ORACLE  # noqa: E402
     "batch weekly_active_users_growth EXACTLY (SHARED oracle; events "
     "totals ride exact per-batch counts summed by week). The "
     "distinct-pair store is the mergeable sufficient statistic for "
-    "exact distinct aggregation — the same reason "
-    "hourly_business_metrics_twophase pre-aggregates pairs; at 100 TB "
-    "the store is (weeks × active users) sized, not event sized.",
+    "exact distinct aggregation; at 100 TB the store is "
+    "(weeks × active users) sized, not event sized.",
 )
 def q_streaming_wau_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

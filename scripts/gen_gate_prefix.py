@@ -14,7 +14,7 @@ per-entry hash evidence in ``CORRECTNESS_r{N}.json``. The prefix we want is:
 3. truncated to exactly ``--cap`` names (default 50, the driver's window).
 
 Usage:
-    python scripts/gen_gate_prefix.py --changed customer_view_prefilter
+    python scripts/gen_gate_prefix.py --changed customer_view
     python scripts/gen_gate_prefix.py --check   # assert == committed prefix
 
 ``--check`` regenerates from the DECLARED changed set — the committed

@@ -27,17 +27,13 @@ from energy_data_stream_processing_spark.functions.stage_metrics import (
 from energy_data_stream_processing_spark.plans.catalog import all_queries
 from energy_data_stream_processing_spark.session import get_spark
 
-# One representative per SCALE.md §2 family (plus both customer_view scale
-# variants — their shuffle profiles are the point of the comparison).
+# One representative per SCALE.md §2 family.
 PROBE_QUERIES = [
     "total_energy_trend",        # distinct-free hourly sum: pure collapse
     "hourly_business_metrics",   # 15-metric agg incl. 2 exact distincts
-    "hourly_business_metrics_twophase",  # skew swap: (hour,cust) pre-agg
     "revenue_rollup",            # hour->day->week hierarchy
     "rolling_24h_metrics",       # window over the hours-sized frame
     "customer_view",             # per-user chain, single shuffle
-    "customer_view_twophase",    # per-user chain, partial-agg pre-shuffle
-    "customer_view_prefilter",   # per-user chain, switch-slice variant
     "user_sessions",             # sessionization windows
     "shipping_priority",         # TPC-H-shaped join (Q3)
     "pricing_insights",          # multi-dim pricing rollup

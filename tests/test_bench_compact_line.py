@@ -43,7 +43,6 @@ def _synthetic_result(n_alerts: int = 5, extra_queries: int = 0) -> dict:
             },
         },
         "ladder": {"value": 14.5},
-        "ladder100": {"value": 31.2},
         "streaming_replay_sec": 12.3,
         "streaming_replay_sharded_sec": 15.6,
         "replay_sharded_hot": {

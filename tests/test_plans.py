@@ -714,3 +714,37 @@ def test_ann_audit_never_row_at_a_time(spark, sf_dir, name):
     plan = _plan(spark, sf_dir, name)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan  # the bucket/cell kernels, vectorized
+
+
+def test_customer_view_build_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """Building customer_view over events it has never seen must stay lazy:
+    no Spark job at plan-build time, and one scan feeding one aggregation.
+    The table is loaded first because Spark's own parquet schema inference
+    reads the new file's footer in a job; the diff then counts only what
+    the builder adds. Job ids are global and monotonic, so the gap between
+    two sentinel jobs counts every job in between."""
+    import shutil
+    import uuid
+
+    from energy_data_stream_processing_spark.sources.adapter import energy_events
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    energy_events(spark, str(tmp_path))
+    sc = spark.sparkContext
+
+    def sentinel_job_id() -> int:
+        group = f"cv-sentinel-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "job-count sentinel")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = sentinel_job_id()
+    df = all_queries()["customer_view"].builder(spark, str(tmp_path))
+    after = sentinel_job_id()
+    assert after == before + 1, f"build ran {after - before - 1} Spark job(s)"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan parquet", plan)) == 1

@@ -140,3 +140,44 @@ def test_stream_checkpoint_restart_no_duplicates(registered, fixture_path, tmp_p
     assert len(seen) == n_first, (
         f"restart re-emitted {len(seen) - n_first} committed lines"
     )
+
+
+def test_cli_second_fresh_drain_of_one_file_stays_paced(tmp_path, capsys):
+    """Two fresh ``pipeline --streaming`` runs over the SAME JSONL file, each
+    to its own output dir (own checkpoint): the second is a new delivery
+    lineage and must replay paced from line 0 again, ceil(lines / 100)
+    micro-batches at the CLI default, not one batch holding the whole file
+    because the first run's commit floor leaked into it. Re-running into
+    the first output restarts its checkpoint and emits nothing."""
+    import math
+
+    from energy_data_stream_processing_spark.__main__ import main
+
+    n = 250
+    path = tmp_path / "events.jsonl"
+    path.write_text(
+        "".join(
+            json.dumps(
+                {
+                    "event_type": "user_login",
+                    "event_time": f"2024-01-01T{i % 24:02d}:00:00",
+                    "payload": {"customer_id": f"C{i % 7}", "session_id": i,
+                                "channel": "web"},
+                }
+            )
+            + "\n"
+            for i in range(n)
+        )
+    )
+
+    def drain(run):
+        assert main(["pipeline", "--input", str(path), "--output",
+                     str(tmp_path / run), "--streaming"]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    for run in ("first", "second"):
+        stats = drain(run)
+        assert stats["valid"] == n, (run, stats)
+        assert stats["batches"] == math.ceil(n / 100), (run, stats)
+    stats = drain("first")
+    assert stats["valid"] == stats["batches"] == 0, stats

@@ -7,8 +7,6 @@
 - vectorized ``_stateful_update_fn`` (verdict item 2): the pandas-mask
   arithmetic must be value-identical to the per-row loop it replaced —
   pinned directly on a hand-made chunk with every null/NaN/rounding edge;
-- density-dispatched ``customer_view`` (verdict item 3): ``variant='auto'``
-  must measure per-customer density and pick the ladder-measured plan;
 - round-10 advice: DST fall-back hour keys must not kill the bounded
   stream (AmbiguousTimeError) — the repeated wall hour's two epoch
   occurrences stay DISTINCT state groups, each emitting its own
@@ -288,79 +286,6 @@ def test_vectorized_sessionize_matches_sequential_reference(seed):
     got = _run_session_update(_session_update_fn(gap_sec), carried, chunks)
     want = _run_session_update(old_session_update_fn(gap_sec), carried, chunks)
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# customer_view density dispatch
-# ---------------------------------------------------------------------------
-def _n_filescans(df):
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return len(re.findall(r"FileScan parquet", plan))
-
-
-def test_customer_view_auto_picks_single_at_low_density(spark, sf_dir):
-    """Testdata density is ~67 events/customer — below the replicated
-    crossover (200, SCALE.md §6), so auto must return the single-shuffle
-    plan (one events scan, no switch-branch join, no phase-1
-    session-keyed pre-aggregation shuffle)."""
-    from energy_data_stream_processing_spark.plans.catalog import all_queries
-
-    df = all_queries()["customer_view"].builder(spark, sf_dir)
-    assert _n_filescans(df) == 1
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # "p_sw" is the twophase phase-1 alias; the planner's own
-    # count_distinct rewrite gives SINGLE the same exchange keys, so
-    # exchange shape does not discriminate — the alias does
-    assert "p_sw" not in plan
-
-
-def test_customer_view_auto_picks_twophase_at_high_density(spark, sf_dir):
-    """With a caller-supplied density above the crossover, auto must return
-    the TWO-PHASE plan — the replicated round-11 high-density winner
-    (SCALE.md §6): one scan, with the phase-1 (customer_id, session_id)
-    pre-aggregation shuffle — and stay result-identical to the
-    single-shuffle plan."""
-    from energy_data_stream_processing_spark.plans.catalog import all_queries
-    from energy_data_stream_processing_spark.plans.energy_queries import (
-        CUSTOMER_VIEW_DENSITY_CROSSOVER,
-    )
-
-    q = all_queries()["customer_view"].builder
-    hi = q(spark, sf_dir, events_per_customer=CUSTOMER_VIEW_DENSITY_CROSSOVER * 3)
-    assert _n_filescans(hi) == 1
-    plan = hi._jdf.queryExecution().executedPlan().toString()
-    assert "p_sw" in plan  # the twophase phase-1 alias
-    lo = q(spark, sf_dir, variant="single")
-    cols = sorted(hi.columns)
-    assert cols == sorted(lo.columns)
-    got = sorted(map(tuple, hi.select(*cols).collect()))
-    want = sorted(map(tuple, lo.select(*cols).collect()))
-    assert got == want and len(got) > 0
-
-
-def test_customer_view_dispatch_rejects_unknown_variant(spark, sf_dir):
-    from energy_data_stream_processing_spark.plans.catalog import all_queries
-
-    with pytest.raises(ValueError, match="variant"):
-        all_queries()["customer_view"].builder(spark, sf_dir, variant="bogus")
-
-
-def test_estimate_events_per_customer_close_to_exact(spark, sf_dir):
-    from energy_data_stream_processing_spark.plans.energy_queries import (
-        energy_events,
-        estimate_events_per_customer,
-    )
-
-    ev = energy_events(spark, sf_dir)
-    est = estimate_events_per_customer(ev)
-    row = ev.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("customer_id").alias("c")
-    ).first()
-    exact = row["n"] / row["c"]
-    # HLL error is ~2%; the crossover band is a full decade wide
-    assert est == pytest.approx(exact, rel=0.10)
 
 
 # ---------------------------------------------------------------------------

@@ -199,28 +199,7 @@ def test_gate_prefix_orders_by_evidence_age():
     ascending over oracle-backed entries, never-sampled first."""
     g = _gen_gate_prefix()
     latest = g.evidence_age()
-    out = g.gen_prefix(["customer_view_prefilter"], cap=50)
-    assert out[0] == "customer_view_prefilter"
+    out = g.gen_prefix(["customer_view"], cap=50)
+    assert out[0] == "customer_view"
     ages = [latest.get(n, 0) for n in out[1:]]
     assert ages == sorted(ages)
-
-
-# ---------------------------------------------------------------------------
-# customer_view_prefilter plan gate: the whole point of the third variant is
-# that the switch branch reads a PRUNED scan with the tariff_switch filter
-# applied before its shuffle — if either regresses, the plan silently decays
-# back to two full-width scans and the 100x ladder win evaporates.
-# ---------------------------------------------------------------------------
-def test_customer_view_prefilter_plan_prunes_switch_branch(spark, sf_dir):
-    from energy_data_stream_processing_spark.plans.catalog import all_queries
-
-    df = all_queries()["customer_view_prefilter"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "= tariff_switch)" in plan, "switch-branch filter missing"
-    import re
-
-    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
-    assert len(scans) == 2, f"expected 2 scans, got {len(scans)}"
-    widths = sorted(len(s.split(",")) for s in scans)
-    # the switches scan must read strictly fewer columns than the wide agg
-    assert widths[0] < widths[1], f"switch scan not pruned: {widths}"

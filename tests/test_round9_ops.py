@@ -193,10 +193,9 @@ def test_reference_sample_stream_matches_batch(spark, ingest_dir):
 # (query, shuffle_write upper bound in bytes at sf0.01). Measured values sit
 # 4-6x below each bound (calibration: scripts/shuffle_accounting_probe.py at
 # sf0.01 — total_energy_trend 14.8 KB, hourly_business_metrics 339 KB,
-# rolling_24h 198 KB, customer_view 688 KB / twophase 834 KB / prefilter
-# 627 KB, user_sessions 254 KB, shipping_priority 37 KB, pricing_insights
-# 54 KB, dedup_exact 23 KB, dedup_minhash_lsh 157 KB, dedup_ngram_jaccard
-# 812 KB, cosine_topk 2.3 KB, ann_ivf 42 KB, packing 155 B — against a
+# rolling_24h 198 KB, customer_view 688 KB, user_sessions 254 KB,
+# shipping_priority 37 KB, pricing_insights 54 KB, dedup_exact 23 KB,
+# dedup_minhash_lsh 157 KB, dedup_ngram_jaccard 812 KB, cosine_topk 2.3 KB, ann_ivf 42 KB, packing 155 B — against a
 # 221 KB events scan). The bounds stay meaningful: a plan that stops
 # collapsing map-side (or shuffles the fact where it should shuffle hours,
 # or re-grows an all-pairs join) blows through them immediately.
@@ -204,11 +203,8 @@ SHUFFLE_GATES = [
     ("total_energy_trend", 64 * 1024),
     ("revenue_rollup", 64 * 1024),
     ("hourly_business_metrics", 1536 * 1024),
-    ("hourly_business_metrics_twophase", 2 * 1024 * 1024),
     ("rolling_24h_metrics", 1024 * 1024),
     ("customer_view", 3 * 1024 * 1024),
-    ("customer_view_twophase", 4 * 1024 * 1024),
-    ("customer_view_prefilter", 3 * 1024 * 1024),
     ("user_sessions", 1024 * 1024),
     ("shipping_priority", 192 * 1024),
     ("pricing_insights", 256 * 1024),
